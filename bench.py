@@ -17,8 +17,8 @@ Noise handling: single-shot timings on a shared host swing inside a
 documented 67-102 s band for the full suite, which makes one-pass
 comparisons meaningless. The bench therefore runs
 ``$SPARK_GRAFT_BENCH_REPEATS`` (default 2) interleaved full passes —
-repeats of a query are separated by the whole suite, so a transient host
-stall cannot bias one query's every sample — and reports per-query MIN
+repeats of a query never run back to back, so a transient host stall
+cannot bias one query's every sample — and reports per-query MIN
 (the least-noise estimate of plan cost) plus per-query spread and
 per-family subtotals so regressions localize to an operator family.
 
@@ -70,6 +70,18 @@ def _sf_from_dir(sf_dir: str) -> float:
         return -1.0
 
 
+def _repeat_order(
+    samples: dict[str, list[float]], last_run: str | None
+) -> list[str]:
+    """A repeat pass's order: slowest first by first sample, except that
+    ``last_run`` (the query that ended the previous pass) never starts
+    it — it swaps places with the next query instead."""
+    order = sorted(samples, key=lambda n: -(samples[n][0] if samples[n] else 0.0))
+    if len(order) > 1 and order[0] == last_run:
+        order[0], order[1] = order[1], order[0]
+    return order
+
+
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     repeats = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "2")))
@@ -111,6 +123,7 @@ def main() -> int:
             spark.catalog.clearCache()
 
     budget_hit = False
+    last_run = None
     for pass_no in range(repeats):
         # Pass scheduling by value (r17 verdict item 1): pass 0 runs in
         # name order (stable, comparable with every prior round), but
@@ -121,15 +134,15 @@ def main() -> int:
         # regression gate. r17's budget-cut run degraded the WHOLE suite
         # to single cold samples and manufactured 31 phantom family
         # regressions; this keeps the gateable minimums settled first.
-        # Repeats of a query remain separated by dozens of other queries
-        # (a full pass each way), preserving the interleaving rationale.
+        # A repeat pass never starts with the query that ended the
+        # previous pass (``_repeat_order``), so no query's two samples
+        # run back to back, where JIT and OS-cache warmth would bias its
+        # min; every query's samples are separated by at least one other
+        # query, and the slowest still run early.
         if pass_no == 0:
             order = sorted(queries)
         else:
-            order = sorted(
-                queries,
-                key=lambda n: -(samples[n][0] if samples[n] else 0.0),
-            )
+            order = _repeat_order(samples, last_run)
         for name in order:
             if pass_no > 0 and time.time() - bench_start > time_budget:
                 budget_hit = True
@@ -137,6 +150,7 @@ def main() -> int:
             if name in failures:
                 continue
             fn = queries[name]
+            last_run = name
             t0 = time.time()
             try:
                 df = fn(spark, sf_dir)

@@ -625,6 +625,14 @@ def _verify_jaccard(
     streaming loops sharing a session with caller-owned caches) pass
     ``persisted_out``: the intermediates this call persists are appended
     there for the caller to ``unpersist()`` after its action completes.
+
+    Building the returned DataFrame is EAGER: it runs
+    ``cand_docs.count()`` (the broadcast-size guard below), which
+    executes the whole upstream shingle + sign + band candidate DAG.
+    Plan-only callers (``explain``, plan snapshots, a query that is never
+    executed) pay for that job; it is why the LSH near-dup entries, and
+    the pipelines composing them, are on the construction-job allowlist
+    in ``tests/test_tables.py``.
     """
     cand_docs = (
         candidates.select(F.explode(F.array("doc_a", "doc_b")).alias("doc_id"))

@@ -1,9 +1,12 @@
 """Corpus table loaders.
 
 The driver corpus (``TESTDATA.md``/``FIXTURES.md``) is one parquet file per
-table under ``{sf_dir}/``. Loading is lazy: ``spark.read.parquet`` only
-reads footers, so per-query loads are cheap and Catalyst sees the scan
-directly (predicate pushdown + column pruning reach the parquet reader).
+table under ``{sf_dir}/``. Spark's parquet schema inference runs a job on
+every bare ``spark.read.parquet``, so :func:`table` infers each file's
+schema once, keyed on the file's identity and the reader confs that shape
+inference, and reads it with ``spark.read.schema(...)`` after that, which
+launches no job. Catalyst sees the scan directly either way (predicate
+pushdown + column pruning reach the parquet reader).
 
 At 100 TB these would be directory-partitioned parquet/lakehouse tables;
 the API is identical — only the path changes — and every downstream
@@ -13,8 +16,10 @@ operator is written against the DataFrame, not the file layout.
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from .session import ensure_session_confs
 
@@ -118,6 +123,48 @@ PRIMARY_KEYS: dict[str, tuple[str, ...]] = {
 }
 
 
+#: Session confs that change the schema parquet inference returns; part of
+#: each :data:`_SCHEMAS` stamp so a conf change re-infers.
+_INFERENCE_CONFS: tuple[str, ...] = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+)
+
+#: Absolute path of a regular local parquet file -> (stamp, inferred
+#: schema), the stamp being (inode, mtime ns, size, inference confs). One
+#: entry per path: a rewrite or a conf change replaces it.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring a regular local file's
+    schema only while its stamp is unseen. Anything else (a directory, a
+    URI) is inferred on every read: one ``stat`` cannot vouch for what it
+    holds. Two threads racing on a new file both infer; either result is
+    the same schema."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)
+    if not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    key = os.path.abspath(path)
+    stamp = (
+        st.st_ino,
+        st.st_mtime_ns,
+        st.st_size,
+        tuple(spark.conf.get(k) for k in _INFERENCE_CONFS),
+    )
+    seen = _SCHEMAS.get(key)
+    if seen is not None and seen[0] == stamp:
+        return spark.read.schema(seen[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = (stamp, df.schema)
+    return df
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Lazy scan of one corpus table.
 
@@ -141,7 +188,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown corpus table {name!r}; expected one of {TABLE_NAMES}")
     ensure_session_confs(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events":
         ts_dtype = dict(df.dtypes)["ts"]
         if ts_dtype == "bigint":  # legacy ns corpus via nanosAsLong
